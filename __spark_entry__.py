@@ -176,19 +176,6 @@ def _marker_sql_padded(padded_col: str, words) -> str:
     return f"len(regexp_extract_all({padded_col}, '{pat}'))"
 
 
-def _marker_sql_old(col: str, words) -> str:
-    """SQL twin of textstats._marker_hits."""
-    padded = f"(' ' || lower({col}) || ' ')"
-    terms = []
-    for w in words:
-        pat = f" {w} "
-        terms.append(
-            f"CAST((length({padded}) - length(replace({padded}, '{pat}', ' ')))"
-            f" / {len(pat) - 1} AS INT)"
-        )
-    return "(" + " + ".join(terms) + ")"
-
-
 # ---------------------------------------------------------------------------
 # queries
 # ---------------------------------------------------------------------------

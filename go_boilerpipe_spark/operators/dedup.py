@@ -113,10 +113,13 @@ def _minhash_kernel_factory(num_hashes: int, shingle_n: int):
     return kernel
 
 
-# per-task shingle-digest cache bound: ~260k entries ≈ tens of MB. Never
-# hit at bench scale (≈30k distinct shingles); at crawl scale it bounds
-# task memory while still deduplicating the high-frequency boilerplate
-# shingles that dominate web corpora.
+# per-task shingle-digest cache bound: 262,144 entries. An entry holds the
+# shingle key and a list of num_hashes 16-byte digests as bytes objects,
+# about 880 B at the default 12 hashes (measured with tracemalloc on
+# ~25-character shingles), so a full cache is about 230-250 MB per task.
+# Never hit at bench scale (≈30k distinct shingles); at crawl scale it
+# bounds task memory while still deduplicating the high-frequency
+# boilerplate shingles that dominate web corpora.
 _MINHASH_CACHE_CAP = 1 << 18
 
 
@@ -537,43 +540,6 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
         )
         sim = term if sim is None else sim + term
     return per_doc.select(F.col(id_col), sim.alias("simhash"))
-
-
-def simhash_near_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    bits: int = 56,
-    bucket_bits: int = 16,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance, bucketed by the top
-    ``bucket_bits`` so the self-join is linear in bucket sizes. (A full
-    Hamming-ball guarantee needs multi-table rotation; one-bucket probing
-    is the standard recall/cost tradeoff and is what we verify.)
-    ``max_bucket_size`` drops oversized buckets (duplicate clusters share
-    the whole simhash → the same bucket) before the self-join."""
-    sh = simhash(df, id_col, text_col, bits)
-    bucketed = sh.withColumn(
-        "bucket", F.shiftright(F.col("simhash"), bits - bucket_bits)
-    )
-    if max_bucket_size is not None:
-        bucketed = _cap_buckets(bucketed, max_bucket_size)
-    # merge hint: single-kernel exchange reuse (see minhash_lsh_pairs)
-    a, b = bucketed.alias("a").hint("merge"), bucketed.alias("b").hint("merge")
-    pairs = a.join(
-        b,
-        (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-        F.bit_count(
-            F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-        ).alias("hamming"),
-    )
-    return pairs.filter(F.col("hamming") <= max_hamming)
 
 
 def _bucket_pair_scorer_factory(id_name: str, vec_name: str,

@@ -9,12 +9,17 @@ materialization, no per-row Python anywhere in the driver-visible plan.
 Scale notes (100 TB / 1000-executor design):
 - the kernel is a pure per-document function ⇒ embarrassingly parallel,
   deterministic under any partitioning (N vs 4N executors byte-identical);
-- input is repartitioned on xxhash64(url) upstream (plans/extract_job.py)
-  to defuse host-level clustering in crawl order; AQE handles residual skew;
-- Arrow batches are *byte*-capped by the caller via
-  ``spark.sql.execution.arrow.maxRecordsPerBatch`` plus the size-aware
-  re-chunking below, keeping Python-worker memory bounded even when single
-  documents are multi-MB.
+- input is repartitioned on xxhash64(url) before the Arrow stage to
+  defuse host-level clustering in crawl order; AQE handles residual skew;
+- the partition count follows the input's estimated bytes
+  (operators.util.task_count): one task per 64 MiB, never fewer than the
+  cores. Every Python task pays a fixed ~0.5 s (measured on a 4-core VM;
+  see ``TASK_INPUT_BYTES``), so the former fixed 4 x cores split a 73 MB
+  input into 16 tasks whose start-up cost more than the kernel's work;
+- Arrow input batches are capped by the session at 512 records and
+  ``spark_session.ARROW_MAX_BATCH_BYTES``, and output batches by the
+  size-aware re-chunking below, keeping Python-worker memory bounded even
+  when single documents are multi-MB.
 """
 
 from __future__ import annotations
@@ -24,6 +29,7 @@ from typing import Iterator
 import pyarrow as pa
 
 from ..kernel.document import extract_content
+from .util import url_hash_repartition
 
 # Sink schema — FIXTURES.md §4.
 OUTPUT_SCHEMA_DDL = (
@@ -290,11 +296,7 @@ def extract_articles_deduped(
         .dropDuplicates(["url"])
     )
     if repartition:
-        # ALWAYS an explicit partition count: repartition(col) without a
-        # number is AQE-coalescible, and a coalesced-to-one small stage
-        # serializes the Python kernel (r5 lesson from the MinHash guard)
-        n = parallelism or 4 * df.sparkSession.sparkContext.defaultParallelism
-        uniq = uniq.repartition(n, F.xxhash64("url"))
+        uniq = url_hash_repartition(uniq, parallelism)
     kernel = extract_record_batches if counters is None else _counting_kernel(counters)
     ext = uniq.mapInArrow(kernel, OUTPUT_SCHEMA_DDL)
     ext = ext.withColumnRenamed("url", "_h")
@@ -316,14 +318,8 @@ def extract_articles(
     updated inside the kernel with per-partition lineage counters, so the
     job layer never re-reads the written output.
     """
-    from pyspark.sql import functions as F
-
     pruned = df.select("url", "html")
     if repartition:
-        # explicit count — repartition(col) without one is AQE-coalescible
-        # and a small stage coalesced to one partition serializes the
-        # Python kernel (r5 lesson from the MinHash guard)
-        n = parallelism or 4 * df.sparkSession.sparkContext.defaultParallelism
-        pruned = pruned.repartition(n, F.xxhash64("url"))
+        pruned = url_hash_repartition(pruned, parallelism)
     kernel = extract_record_batches if counters is None else _counting_kernel(counters)
     return pruned.mapInArrow(kernel, OUTPUT_SCHEMA_DDL)

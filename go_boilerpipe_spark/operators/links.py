@@ -19,6 +19,7 @@ import pyarrow as pa
 
 from go_boilerpipe_spark.kernel.links import page_links
 from go_boilerpipe_spark.operators.extract import _decode_html, _scrub
+from go_boilerpipe_spark.operators.util import url_hash_repartition
 
 OUTPUT_SCHEMA_DDL = (
     "url string, href string, resolved string, anchor string"
@@ -95,10 +96,7 @@ def extract_links_df(df, parallelism: int | None = None,
     shuffles on xxhash64(url) with an explicit partition count (an
     uncounted repartition(col) is AQE-coalescible, which would serialize
     the Python kernel on small stages)."""
-    from pyspark.sql import functions as F
-
     pruned = df.select("url", "html")
     if repartition:
-        n = parallelism or 4 * df.sparkSession.sparkContext.defaultParallelism
-        pruned = pruned.repartition(n, F.xxhash64("url"))
+        pruned = url_hash_repartition(pruned, parallelism)
     return pruned.mapInArrow(links_record_batches, OUTPUT_SCHEMA_DDL)

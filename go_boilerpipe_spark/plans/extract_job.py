@@ -2,7 +2,10 @@
 
 North-rule requirements implemented here (BASELINE.json):
 - explicit partitioning/skew handling: repartition on xxhash64(url) before
-  the Python stage; AQE for residual skew;
+  the Python stage, into one task per 64 MiB of the chunk's estimated
+  input and never fewer than the cores (operators.util.task_count; each
+  Python task pays a fixed ~0.5 s, measured on a 4-core VM, so a small
+  chunk no longer pays for 4 x cores of them); AQE for residual skew;
 - checkpoint-resumable incremental commits: the input's data files are
   grouped into deterministic *chunks* (by size); each chunk is extracted
   and committed independently (sink subdir ``chunk=<id>`` + a manifest
@@ -32,12 +35,7 @@ from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from ..operators.extract import PartitionCountersParam, extract_articles
-from ..sources.catalog import ParquetCatalog, get_catalog
-
-
-def list_input_files(spark, path: str):
-    """Stable, sorted data-file list for deterministic chunking."""
-    return ParquetCatalog(spark).list_data_files(path)
+from ..sources.catalog import get_catalog
 
 
 class _FS:

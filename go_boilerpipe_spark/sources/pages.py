@@ -10,7 +10,9 @@ generation path.
 
 Skew mode assigns ~60% of replicas to docs 1+2 (both lasvegassun.com →
 two hosts own most rows), mirroring host-level clustering in crawl order —
-the thing ``repartition(P, xxhash64(url))`` exists to defuse.
+the thing the extraction operators' ``repartition(P, xxhash64(url))``
+exists to defuse (P: one task per 64 MiB of estimated input, at least the
+cores; operators.util.task_count).
 """
 
 from __future__ import annotations

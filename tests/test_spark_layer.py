@@ -153,6 +153,133 @@ class TestExtractOperator:
         assert errs == 7
 
 
+def _inline_news_pages(n: int) -> list[tuple[str, bytes]]:
+    """Deterministic in-repo pages: a chrome-heavy news page per index,
+    plus the full-pipeline fuzz cases, so the operator sees both content
+    and near-empty documents."""
+    from tests.adversarial_inputs import full_pipeline_fuzz_cases
+
+    pages = []
+    for i in range(n):
+        body = "".join(
+            f"<p>Paragraph {j} of story {i} reports that the council met "
+            f"on day {i % 28 + 1} and agreed, after a long and careful "
+            f"debate among its members, to fund {j + i} new projects.</p>"
+            for j in range(1 + i % 6)
+        )
+        html = (
+            f"<html><head><title>Story {i} | Daily</title></head><body>"
+            f"<div class=nav><a href=/>Home</a> | <a href=/n>News</a></div>"
+            f"<h1>Story {i}</h1>{body}"
+            f"<div class=footer>Copyright Daily. Comments</div></body></html>"
+        )
+        pages.append((f"http://news{i % 5}.test/story/{i}", html.encode()))
+    for k, frag in enumerate(full_pipeline_fuzz_cases(40)):
+        pages.append((f"http://fuzz.test/{k}", frag.encode()))
+    return pages
+
+
+class TestTaskCount:
+    """The url-hash extraction stage's partition count: one task per
+    ``TASK_INPUT_BYTES`` of estimated input, never fewer than the cores."""
+
+    def test_floor_at_cores(self):
+        from go_boilerpipe_spark.operators.util import task_count
+
+        assert task_count(0, 4) == 4
+        assert task_count(1, 4) == 4
+        assert task_count(4 * (64 << 20), 4) == 4
+        # no estimate (streaming, or a leaf without statistics)
+        assert task_count(None, 4) == 4
+
+    def test_one_task_per_64_mib_above_floor(self):
+        from go_boilerpipe_spark.operators.util import (
+            TASK_INPUT_BYTES,
+            task_count,
+        )
+
+        assert TASK_INPUT_BYTES == 64 << 20
+        assert task_count(4 * TASK_INPUT_BYTES + 1, 4) == 5
+        assert task_count(100 * TASK_INPUT_BYTES, 4) == 100
+        assert task_count(100 * TASK_INPUT_BYTES - 1, 4) == 100
+
+    def test_explicit_parallelism_wins(self):
+        from go_boilerpipe_spark.operators.util import task_count
+
+        assert task_count(100 * (64 << 20), 4, parallelism=17) == 17
+        assert task_count(0, 4, parallelism=2) == 2
+        assert task_count(None, 4, parallelism=17) == 17
+
+    def test_streaming_input_has_no_estimate(self, spark, tmp_path):
+        from go_boilerpipe_spark.operators.util import estimated_bytes
+
+        src = str(tmp_path / "pages")
+        spark.createDataFrame(_inline_news_pages(3), "url string, html binary") \
+            .write.parquet(src)
+        stream = spark.readStream.schema("url string, html binary").parquet(src)
+        assert estimated_bytes(stream) is None
+        assert estimated_bytes(spark.read.parquet(src)) > 0
+
+    def test_rdd_input_has_no_estimate(self, spark):
+        # a plan over an RDD leaf reports spark.sql.defaultSizeInBytes
+        # (scaled by row widths above it); it must not size the stage
+        from go_boilerpipe_spark.operators.util import estimated_bytes
+
+        df = spark.createDataFrame(_inline_news_pages(3),
+                                   "url string, html binary")
+        assert estimated_bytes(df.select("url")) is None
+
+    def test_default_path_on_small_input(self, spark, tmp_path):
+        from go_boilerpipe_spark.operators.links import extract_links_df
+        from go_boilerpipe_spark.operators.extract import (
+            extract_articles_deduped,
+        )
+
+        src = str(tmp_path / "pages")
+        spark.createDataFrame(_inline_news_pages(120),
+                              "url string, html binary").write.parquet(src)
+        pages = spark.read.parquet(src)
+        cores = spark.sparkContext.defaultParallelism
+
+        default = extract_articles(pages)
+        assert default.rdd.getNumPartitions() == cores
+        assert extract_links_df(pages).rdd.getNumPartitions() == cores
+        explicit = extract_articles(pages, parallelism=17)
+        assert explicit.rdd.getNumPartitions() == 17
+        rows = sorted(default.collect())
+        assert len(rows) == 160
+        assert any(r["content"] for r in rows)
+        assert rows == sorted(explicit.collect())
+        assert rows == sorted(extract_articles_deduped(pages).collect())
+
+
+def test_arrow_input_batches_are_byte_capped(spark):
+    """``build_session`` caps each Arrow batch sent to a Python worker at
+    ``ARROW_MAX_BATCH_BYTES``: 400 rows of a 200th of the cap each (about
+    20 KB at 4 MiB) in one partition stay under the 512-record cap,
+    so only the byte cap splits them. Spark closes a batch once it
+    reaches the cap, so a batch may pass it by at most one row."""
+    from go_boilerpipe_spark.spark_session import ARROW_MAX_BATCH_BYTES
+
+    row_bytes = ARROW_MAX_BATCH_BYTES // 200
+
+    def sizes(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            yield pa.RecordBatch.from_pydict(
+                {"rows": [b.num_rows],
+                 "nbytes": [b.column("payload").nbytes]})
+
+    df = spark.range(0, 400, 1, 1).select(
+        F.expr(f"unhex(repeat('ab', {row_bytes}))").alias("payload"))
+    got = df.mapInArrow(sizes, "rows long, nbytes long").collect()
+    assert sum(r["rows"] for r in got) == 400
+    assert len(got) >= 2
+    for r in got:
+        assert r["nbytes"] <= ARROW_MAX_BATCH_BYTES + row_bytes, got
+
+
 class TestExtractLinks:
     def test_links_through_spark(self, spark, corpus):
         from go_boilerpipe_spark.operators.links import extract_links_df
